@@ -644,25 +644,6 @@ def shared_supply_nodes_count(spark: SparkSession, sf: str) -> int:
     )
 
 
-def supply_edges(lineitem: DataFrame, pre_distinct: bool = True) -> DataFrame:
-    """Symmetric part↔supplier supply graph from lineitem.
-
-    Node ids are namespaced into one integer space (part p → 2p,
-    supplier s → 2s+1) so the two key domains never collide; each
-    distinct (part, supplier) pair contributes both directed edges.
-
-    ``pre_distinct=False`` skips the dedup shuffle and emits raw
-    (possibly duplicated) pairs — for consumers that dedup themselves,
-    like ``pagerank``'s single-task kernel."""
-    pairs = lineitem.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    )
-    if pre_distinct:
-        pairs = pairs.distinct()
-    return symmetrize(pairs)
-
-
 def _pagerank_oracle(iters: int = PR_ITERS) -> str:
     parts = [
         """pairs AS (
@@ -962,11 +943,12 @@ TRIANGLE_CLOSING_BROADCAST_MAX_EDGES = 40_000_000
 
 def _compact_ids(u, v):
     """(ui, vi, width): edge endpoints as DENSE int64 indices — the raw
-    ids themselves when the id space is already compact (max_id <=
-    4|E|), else an np.unique factorization. The factorization is
-    order-ISOMORPHIC (np.unique sorts), so id comparisons — and with
-    them the (degree, id) orientation tie-breaks — are preserved, and
-    every returned index is < max(4|E|+1, 2|E|) < 2^32 at any kernel
+    ids themselves when the id space is already compact (0 <= id <=
+    4|E|), else an np.unique factorization (which also takes negative
+    ids). The factorization is order-ISOMORPHIC (np.unique sorts), so
+    id comparisons — and with them the (degree, id) orientation
+    tie-breaks — are preserved, and every returned index is
+    < max(4|E|+1, 2|E|) < 2^32 at any kernel
     budget, which is what makes the packed-key arithmetic downstream
     (closing-set keys, single-sort orientation keys) collision-free
     even on raw id spaces wider than 32 bits (r12 review item). Shared
@@ -974,8 +956,9 @@ def _compact_ids(u, v):
     import numpy as np
 
     n = len(u)
+    min_id = int(min(u.min(), v.min())) if n else 0
     max_id = int(max(u.max(), v.max())) if n else 0
-    if max_id <= 4 * n:
+    if min_id >= 0 and max_id <= 4 * n:
         return u, v, max_id + 1
     nodes, inv = np.unique(np.concatenate((u, v)), return_inverse=True)
     return (
@@ -1020,6 +1003,10 @@ def _triangle_csr_kernel_counts(edges: DataFrame) -> DataFrame:
     # caller's dispatch count (r12 review: a non-pinned nondeterministic
     # edge plan could disagree between the count job and this collect)
     n = len(u)
+    if n == 0:
+        return local_rows_df(
+            spark, [(0, 0, 0)], "n_edges long, n_wedges long, n_triangles long"
+        )
     # dense indices (see _compact_ids): degrees become one bincount —
     # the np.unique fallback's 2|E| sort was the top slice of the sf1
     # driver prep (~5 s vs ~0.3 s) — and every index stays < 2^32, so

@@ -43,17 +43,6 @@ ITERS = 3
 QSCALE = 1_000_000  # |x| ≤ ~0.6 → xq ≤ 6e5; 64·diff² ≤ 9e13 ≪ 2^63
 
 
-def quantized_coords(embeddings: DataFrame) -> DataFrame:
-    """Exploded (vec_id, pos, xq) with 1-based pos and integer coords."""
-    return embeddings.select(
-        "vec_id", F.posexplode(F.col("embedding")).alias("pos0", "x")
-    ).select(
-        "vec_id",
-        (F.col("pos0") + 1).alias("pos"),
-        F.floor(F.col("x").cast("double") * QSCALE).cast("bigint").alias("xq"),
-    )
-
-
 def kmeans_assign(
     spark: SparkSession,
     embeddings: DataFrame,

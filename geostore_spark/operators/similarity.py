@@ -56,10 +56,6 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(_dot(a, a))
-
-
 def _lit_vec(vals: list[float]) -> Column:
     return F.array(*[F.lit(v) for v in vals])
 

@@ -48,15 +48,6 @@ def _cell(v: Column) -> Column:
     return F.floor(v / F.lit(CELL_DEG))
 
 
-def grid_cover(bbox: Column) -> tuple[Column, Column]:
-    """Column pair of cell-index ranges (x and y) a box overlaps, as
-    ``sequence`` arrays ready to explode."""
-    return (
-        F.sequence(_cell(_c(bbox, 0)), _cell(_c(bbox, 2))),
-        F.sequence(_cell(_c(bbox, 1)), _cell(_c(bbox, 3))),
-    )
-
-
 def spatial_grid_join(
     left: DataFrame, right: DataFrame, l_id: str, r_id: str
 ) -> DataFrame:

@@ -280,9 +280,9 @@ def local_rows_df(spark: SparkSession, rows, schema_ddl: str) -> DataFrame:
     verification + Java conversion whose FIRST call in a session costs
     ~1.4 s and ~0.3 s warm (measured r12 — it was the single biggest
     slice of the graph kernels' cold bench rows); the Arrow branch is
-    ~0.1 s cold. Handles the flat int/long/double/string DDL subset the
-    kernel-result and rule-table sites use, falling back to the list
-    branch for anything richer."""
+    ~0.1 s cold. Handles the int/long/double/string/array<int> DDL
+    subset the kernel-result, rule-table and traversal sites use,
+    falling back to the list branch for anything richer."""
     import pandas as pd
 
     dtypes = {
@@ -292,6 +292,7 @@ def local_rows_df(spark: SparkSession, rows, schema_ddl: str) -> DataFrame:
         "bigint": "int64",
         "double": "float64",
         "string": "object",
+        "array<int>": "object",
     }
     try:
         cols = []

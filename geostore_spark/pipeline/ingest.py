@@ -47,7 +47,7 @@ from geostore_spark.logging_keys import (
 from geostore_spark.pipeline import validation as V
 from geostore_spark.pipeline.checksums import verify_checksums
 from geostore_spark.pipeline.io import opener_snapshot as _opener_snapshot
-from geostore_spark.pipeline.traversal import traverse
+from geostore_spark.pipeline.traversal import documents_frame, traverse
 from geostore_spark.pipeline.ulid import human_readable_ulid, ulid
 from geostore_spark.sources.store import MetadataStore
 
@@ -297,15 +297,14 @@ def _run_pipeline(
     # completes (T4) with validation_success=false
     from geostore_spark.pipeline.io import opener_snapshot, url_scheme
 
-    if url_scheme(metadata_url) not in opener_snapshot():
-        from geostore_spark.pipeline.traversal import read_documents
-
-        docs = (
-            read_documents(spark, [])  # traverse-shaped, zero documents
-            .withColumn("path", F.lit(None).cast("array<int>"))
-            .withColumn("discovery_ord", F.lit(None).cast("long"))
-            .cache()
-        )
+    unregistered = url_scheme(metadata_url) not in opener_snapshot()
+    docs = (
+        documents_frame(spark, [])  # zero documents
+        if unregistered
+        else traverse(spark, metadata_url)  # V1
+    ).cache()
+    assets = V.collect_assets(docs)
+    if unregistered:
         checks = spark.createDataFrame(
             [
                 (
@@ -321,16 +320,14 @@ def _run_pipeline(
             "url string, check string, result string, details map<string,string>",
         )
     else:
-        # V1 traversal + V10/V2-V5/V9 validation (+ per-URL fetch rows)
-        docs = traverse(spark, metadata_url).cache()
+        # V10/V2-V5/V9 validation (+ per-URL fetch rows)
         checks = (
             V.root_type_gate(docs, metadata_url)
             .unionByName(V.validate_documents(docs))
             .unionByName(V.fetch_failure_rows(docs))
-            .unionByName(V.no_assets_gate(V.collect_assets(docs), metadata_url))
+            .unionByName(V.no_assets_gate(assets, metadata_url))
         )
 
-    assets = V.collect_assets(docs)
     asset_rows = assets.select(
         *key,
         "asset_type",

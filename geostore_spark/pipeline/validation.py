@@ -112,14 +112,6 @@ def duplicate_json_keys(raw: str) -> list[str]:
     return sorted(set(dupes))
 
 
-def _result_row(check: str, result_col, details_col):
-    return F.struct(
-        F.lit(check).alias("check"),
-        result_col.alias("result"),
-        details_col.alias("details"),
-    )
-
-
 def fetch_failure_rows(docs: DataFrame) -> DataFrame:
     """FILE_NOT_FOUND / STAGING_ACCESS rows for documents whose fetch
     failed (traversal captures the exception per URL — the reference

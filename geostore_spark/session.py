@@ -136,11 +136,3 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def get_session() -> SparkSession:
-    """Return the active session or build one with engine defaults."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        return active
-    return build_session()

@@ -392,3 +392,38 @@ def test_triangle_kernel_wide_ids_no_packed_key_collision(spark):
     kernel = triangle_counts_from_edges(edges).collect()[0]
     assert kernel["n_triangles"] == 0
     assert kernel["n_edges"] == len(edges_rows)
+
+
+def test_triangle_kernel_empty_collect_returns_zero_row(spark):
+    """The kernel trusts its own collect over the caller's dispatch
+    count, so an edge plan that yields no rows there must give the zero
+    row instead of failing on the max of an empty array."""
+    from geostore_spark.operators.graph import _triangle_csr_kernel_counts
+
+    empty = spark.createDataFrame([], "u long, v long")
+    [row] = _triangle_csr_kernel_counts(empty).collect()
+    assert (row["n_edges"], row["n_wedges"], row["n_triangles"]) == (0, 0, 0)
+
+
+def test_compact_ids_sends_negative_ids_to_factorization(spark):
+    """Negative ids would pass the dense-path size check and break the
+    bincount downstream; they must be factorized instead, keeping the
+    id order, and the kernel must count their triangle like the join
+    tier does."""
+    import numpy as np
+
+    from geostore_spark.operators.graph import _compact_ids, triangle_counts_from_edges
+
+    u = np.array([-3, -2, -3], dtype=np.int64)
+    v = np.array([-2, -1, -1], dtype=np.int64)
+    ui, vi, width = _compact_ids(u, v)
+    assert width == 3
+    assert ui.tolist() == [0, 1, 0] and vi.tolist() == [1, 2, 2]
+
+    edges = spark.createDataFrame(
+        list(zip(u.tolist(), v.tolist())), "u long, v long"
+    ).localCheckpoint()
+    kernel = triangle_counts_from_edges(edges).collect()[0]
+    joined = triangle_counts_from_edges(edges, kernel_max_edges=0).collect()[0]
+    assert kernel["n_triangles"] == joined["n_triangles"] == 1
+    assert kernel["n_wedges"] == joined["n_wedges"]

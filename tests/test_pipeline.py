@@ -140,18 +140,17 @@ def test_traversal_dataframe_frontier_matches_driver_mode(spark, tmp_path):
 def test_traversal_dataframe_mode_reads_executor_side(spark, tmp_path, monkeypatch):
     """The r6 verdict item: dataframe mode must never enumerate a
     round's URL list on the driver — the frontier feeds an executor-side
-    mapInPandas reader, and the driver-list reader is provably not
-    called."""
+    mapInPandas reader, and the driver walk is provably not called."""
     from geostore_spark.pipeline import traversal as tmod
 
     tree = build_golden_tree(str(tmp_path))
 
-    def forbidden(spark_, urls):
+    def forbidden(spark_, root_url, max_links):
         raise AssertionError(
-            f"driver-list read_documents called in dataframe mode: {urls}"
+            f"driver walk called in dataframe mode: {root_url}"
         )
 
-    monkeypatch.setattr(tmod, "read_documents", forbidden)
+    monkeypatch.setattr(tmod, "_walk", forbidden)
     rows = tmod.traverse(
         spark, tree["root_url"], frontier_mode="dataframe"
     ).orderBy("discovery_ord").collect()

@@ -1,6 +1,6 @@
-"""Auto-dispatch traversal: the mid-walk flip from driver-list to
-DataFrame-frontier bookkeeping (round-7 shape: the post-flip rounds
-read executor-side and keep O(1) driver state) must preserve the
+"""Auto-dispatch traversal: the switch from the driver walk to
+DataFrame-frontier rounds (the partial walk is dropped and the rounds
+start again from the root, reading executor-side) must preserve the
 reference's DFS pre-order exactly."""
 
 from __future__ import annotations
@@ -20,17 +20,25 @@ def test_auto_mode_flips_mid_walk_and_preserves_order(spark, tmp_path, monkeypat
         .collect()
     ]
 
-    # force the flip after the FIRST round: every link volume crosses 0
+    # force the flip at the root's links: every link count crosses 0
     monkeypatch.setattr(tmod, "DF_FRONTIER_THRESHOLD", 0)
-    # after the flip, the driver-list reader must never run again
-    calls = {"n": 0}
-    orig = tmod.read_documents
+    # record driver-side document reads and when the rounds take over;
+    # executor tasks run in Python workers, so their reads never land
+    # in this process's list
+    reads: list[str] = []
+    flipped_at: list[int] = []
+    orig_fetch, orig_rounds = tmod._fetch, tmod._traverse_rounds
 
-    def counting(spark_, urls):
-        calls["n"] += 1
-        return orig(spark_, urls)
+    def counting_fetch(url, openers=None):
+        reads.append(url)
+        return orig_fetch(url, openers)
 
-    monkeypatch.setattr(tmod, "read_documents", counting)
+    def marking_rounds(spark_, root_url):
+        flipped_at.append(len(reads))
+        return orig_rounds(spark_, root_url)
+
+    monkeypatch.setattr(tmod, "_fetch", counting_fetch)
+    monkeypatch.setattr(tmod, "_traverse_rounds", marking_rounds)
     got = [
         (r["url"], r["discovery_ord"])
         for r in tmod.traverse(spark, tree["root_url"], frontier_mode="auto")
@@ -38,7 +46,9 @@ def test_auto_mode_flips_mid_walk_and_preserves_order(spark, tmp_path, monkeypat
         .collect()
     ]
     assert got == want
-    assert calls["n"] == 1  # round 1 only; rounds 2+ read executor-side
+    [n_before] = flipped_at  # the walk flipped, once
+    assert len(reads) == n_before  # no driver-side read after the flip
+    assert n_before <= tmod.DF_FRONTIER_THRESHOLD + 1
 
 
 def _write_wide_tree(root: str, n_collections: int = 12, items_per: int = 4) -> str:

@@ -33,20 +33,29 @@ def _write_graph(d: str, links: dict[str, list[str]]) -> str:
     return os.path.join(d, "root.json")
 
 
-def _model_dfs(links: dict[str, list[str]], root: str = "root") -> list[str]:
+def _model_dfs(
+    links: dict[str, list[str | None]],
+    root: str = "root",
+    paths: dict[str, list[int]] | None = None,
+) -> list[str]:
     """The reference's traversal, literally: mark on entry, recurse
-    not-yet-traversed child/item links in document order."""
+    not-yet-traversed child/item links in document order. A ``None``
+    target stands for a link the walk does not follow (it still takes
+    its link index); ``paths``, when given, receives each visited
+    node's link-index path."""
     visited: set[str] = set()
     order: list[str] = []
 
-    def rec(u: str) -> None:
+    def rec(u: str, path: list[int]) -> None:
         visited.add(u)
         order.append(u)
-        for t in links.get(u, []):
-            if t not in visited:
-                rec(t)
+        if paths is not None:
+            paths[u] = path
+        for i, t in enumerate(links.get(u, [])):
+            if t is not None and t not in visited:
+                rec(t, path + [i])
 
-    rec(root)
+    rec(root, [])
     return order
 
 
