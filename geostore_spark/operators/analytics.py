@@ -17,7 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geostore_spark.operators.dedup import _count_rows_cheap
-from geostore_spark.operators.util import distributed_row_number, pin_branch_point, quantize
+from geostore_spark.operators.util import (
+    choose_tier,
+    distributed_row_number,
+    pin_branch_point,
+    quantize,
+)
 from geostore_spark.registry import register
 from geostore_spark.sources.tables import load_table
 
@@ -174,7 +179,8 @@ def q_rfm(spark: SparkSession, sf: str) -> DataFrame:
     # the measured break-even the per-customer rollup runs in one
     # vectorized task, zero further shuffles
     n_orders = _count_rows_cheap(orders)
-    if n_orders <= RFM_LOCAL_THRESHOLD:
+    tiers = [("local_kernel", RFM_LOCAL_THRESHOLD), ("distributed_rank", None)]
+    if choose_tier("rfm", tiers, n_orders=n_orders) == "local_kernel":
         return _rfm_local(base)
     # the three rankings are INDEPENDENT — build each from the same
     # pinned per-customer base as parallel branches of ONE plan (three
@@ -260,7 +266,12 @@ def shared_order_part_sets(spark: SparkSession, sf: str) -> DataFrame:
             F.sort_array(F.collect_set("l_partkey")).alias("ps")
         )
 
-    if _count_rows_cheap(load_table(spark, "orders", sf)) > ORDER_SETS_PIN_MAX_ORDERS:
+    tier = choose_tier(
+        "order_part_sets_pin",
+        [("pinned", ORDER_SETS_PIN_MAX_ORDERS), ("unpinned", None)],
+        n_orders=_count_rows_cheap(load_table(spark, "orders", sf)),
+    )
+    if tier == "unpinned":
         return build()
     return session_checkpoint(spark, ("order_part_sets", sf), build)
 

@@ -31,8 +31,11 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geostore_spark.logging_keys import LOG_MESSAGE_STRATEGY_DISPATCH, log_event
-from geostore_spark.operators.util import pin_branch_point, rebalance_for_python
+from geostore_spark.operators.util import (
+    choose_tier,
+    pin_branch_point,
+    rebalance_for_python,
+)
 from geostore_spark.registry import register
 from geostore_spark.sources.tables import load_table, load_table_for_compute
 
@@ -635,6 +638,12 @@ def _trigrams(text_col: str) -> Column:
 VERIFY_BROADCAST_MAX_DOCS = 50_000
 
 
+def _broadcast_doc_side(stage: str, n_docs: int) -> bool:
+    """The doc-keyed broadcast-vs-shuffle decision of the verify joins."""
+    tiers = [("broadcast", VERIFY_BROADCAST_MAX_DOCS), ("shuffle", None)]
+    return choose_tier(stage, tiers, n_docs=n_docs) == "broadcast"
+
+
 def _count_rows_cheap(df: DataFrame) -> int:
     """Row count from parquet footer statistics when the plan is
     row-preserving over a scan (Project/alias only — no Filter/Join/
@@ -708,7 +717,7 @@ def _df_ordered_docs_arr(
         .transform(pin_branch_point)
     )
     df_tab = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("tdf"))
-    if n_docs <= VERIFY_BROADCAST_MAX_DOCS:
+    if _broadcast_doc_side("dedup_df_table", n_docs):
         df_tab = F.broadcast(df_tab)
     cols = [
         F.col(id_col),
@@ -741,14 +750,7 @@ def _verify_join(
     arr_b = docs_arr.select(
         F.col(id_col).alias("doc_b"), F.col("hs").alias("hs_b"), F.col("n").alias("n_b")
     )
-    broadcast = n_docs <= VERIFY_BROADCAST_MAX_DOCS
-    log_event(
-        LOG_MESSAGE_STRATEGY_DISPATCH,
-        stage="dedup_verify_join",
-        n_docs=n_docs,
-        strategy="broadcast" if broadcast else "shuffle",
-    )
-    if broadcast:
+    if _broadcast_doc_side("dedup_verify_join", n_docs):
         arr_a, arr_b = F.broadcast(arr_a), F.broadcast(arr_b)
     return cand.join(arr_a, "doc_a").join(arr_b, "doc_b")
 
@@ -1903,8 +1905,7 @@ def q_simhash_eval(spark: SparkSession, sf: str) -> DataFrame:
     ).transform(pin_branch_point)
     ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"))
     gb = grams.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("gb"))
-    n_docs = _count_rows_cheap(docs)
-    if n_docs <= VERIFY_BROADCAST_MAX_DOCS:
+    if _broadcast_doc_side("simhash_eval_verify", _count_rows_cheap(docs)):
         ga, gb = F.broadcast(ga), F.broadcast(gb)
     i = F.size(F.array_intersect("ga", "gb"))
     u = F.size("ga") + F.size("gb") - i

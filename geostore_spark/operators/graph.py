@@ -21,11 +21,26 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geostore_spark.logging_keys import LOG_MESSAGE_STRATEGY_DISPATCH, log_event
 from geostore_spark.operators.dedup import simhash_pairs, simhash_pairs_ctes
 from geostore_spark.registry import register
 from geostore_spark.sources.tables import load_table
-from geostore_spark.operators.util import local_rows_df, pin_branch_point
+from geostore_spark.operators.util import choose_tier, local_rows_df, pin_branch_point
+
+# Single-task union-find budget for connected_components (symmetric
+# edge rows): under it the whole closure is one O(E α(E)) task with
+# zero shuffle rounds.
+CC_LOCAL_MAX_EDGES = 10_000_000
+# Broadcast budget for |V|-row graph state (label tables, rank state,
+# k-core keep sets — 2-3 longs per node, ~24 B x 8 M = 190 MB): under
+# it each round's state join is a broadcast probe over the pinned edge
+# list, past it the rounds run as co-partitioned joins.
+GRAPH_BROADCAST_MAX_NODES = 8_000_000
+
+
+def _broadcast_node_state(stage: str, n_nodes: int) -> bool:
+    """The |V|-row state broadcast decision the graph loops share."""
+    tiers = [("broadcast", GRAPH_BROADCAST_MAX_NODES), ("copartitioned", None)]
+    return choose_tier(stage, tiers, n_nodes=n_nodes) == "broadcast"
 
 
 def _local_union_find(sym: DataFrame) -> DataFrame:
@@ -69,8 +84,6 @@ def connected_components(
     src: str,
     dst: str,
     max_iter: int = 25,
-    local_threshold: int = 10_000_000,
-    broadcast_max_nodes: int = 8_000_000,
 ) -> DataFrame:
     """Label every vertex of an undirected edge list with the minimum
     vertex id reachable from it (= its component id).
@@ -108,16 +121,14 @@ def connected_components(
     # Runtime strategy dispatch (the AQE broadcast-switch idea applied to
     # graph shape): a pair graph whose edge list fits one partition budget
     # is solved by single-task union-find — O(E α(E)), zero shuffle rounds.
-    # Above the threshold the O(log diameter) distributed loop engages;
+    # Above the budget the O(log diameter) distributed loop engages;
     # the count also materializes the checkpoint either way.
-    n_sym = sym.count()
-    log_event(
-        LOG_MESSAGE_STRATEGY_DISPATCH,
-        stage="connected_components",
-        n_edges=n_sym,
-        strategy="local_union_find" if n_sym <= local_threshold else "min_label_rounds",
+    tier = choose_tier(
+        "connected_components",
+        [("local_union_find", CC_LOCAL_MAX_EDGES), ("min_label_rounds", None)],
+        n_edges=sym.count(),
     )
-    if n_sym <= local_threshold:
+    if tier == "local_union_find":
         return _local_union_find(sym)
     labels = (
         sym.select("v")
@@ -133,8 +144,7 @@ def connected_components(
     # the pointer-jump join is |V|-broadcast too. Past the budget the
     # loop falls back to the co-partitioned joins the edge
     # repartition("v") above already serves.
-    n_nodes = labels.count()
-    use_bcast = n_nodes <= broadcast_max_nodes
+    use_bcast = _broadcast_node_state("cc_labels", labels.count())
 
     def _side(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if use_bcast else df
@@ -171,9 +181,8 @@ def connected_components(
 # -- PageRank (integer-exact) ------------------------------------------------
 
 PR_SCALE = 10**12  # rank mass quantum: ranks sum to ~PR_SCALE
-# single-task packed-kernel break-even (symmetric edge count) — the
-# same number pagerank()'s local_threshold defaults to; q_pagerank
-# dispatches on it without a job via the memoized pair count
+# single-task kernel break-even (symmetric edge count, see pagerank());
+# q_pagerank dispatches on it without a job via the memoized pair count
 PR_KERNEL_MAX_EDGES = 2_000_000
 PR_ITERS = 3
 PR_TOP = 100
@@ -334,8 +343,6 @@ def pagerank(
     src: str,
     dst: str,
     iters: int = PR_ITERS,
-    local_threshold: int = 2_000_000,
-    broadcast_max_nodes: int = 8_000_000,
     pre_deduped: bool = False,
     input_pinned: bool = False,
     edge_count: int | None = None,
@@ -378,7 +385,7 @@ def pagerank(
 
     Scale notes: two-level runtime strategy dispatch (the pattern
     proven on ``connected_components``). An edge list under
-    ``local_threshold`` rows runs all iterations in one vectorized
+    ``PR_KERNEL_MAX_EDGES`` rows runs all iterations in one vectorized
     single-task kernel (zero shuffle rounds). The kernel's cost is its
     np.unique sorts — O(|E| log |E|) in ONE task — so it only wins
     where per-iteration job floors dominate real work: measured at sf1
@@ -389,7 +396,7 @@ def pagerank(
     a standalone first call pays mining + loop ≈ 16 s — the r5
     BENCH_sf1 row was exactly that un-amortized case); at sf0.1
     (1.2 M edges) the kernel's ~2 s beats the loop's ~6 jobs of
-    scheduling floor. The 2 M default is that measured
+    scheduling floor. The 2 M budget is that measured
     break-even, not a memory bound (memory would allow ~50 M:
     ~3 × 8 B × |E| of packed-array + sort workspace). Above it, the
     distributed loop: the edge list is hash-partitioned on
@@ -418,9 +425,15 @@ def pagerank(
     if not input_pinned:
         ed0 = ed0.transform(pin_branch_point)
     n_edges = edge_count if edge_count is not None else ed0.count()
-    if kernel_symmetrize:
-        # directed input; the undirected graph the strategies see is 2×
-        if 2 * n_edges <= local_threshold:
+    # with kernel_symmetrize the input is directed; the undirected graph
+    # the strategies see is 2x
+    tier = choose_tier(
+        "pagerank",
+        [("local_kernel", PR_KERNEL_MAX_EDGES), ("distributed_rounds", None)],
+        n_edges=2 * n_edges if kernel_symmetrize else n_edges,
+    )
+    if tier == "local_kernel":
+        if kernel_symmetrize:
             # the pack corrupts silently if ids escape [0, 2^31) — guard
             # in-plan (no extra job) so out-of-contract callers fail loud
             # instead of getting wrong ranks; they should pass
@@ -446,13 +459,12 @@ def pagerank(
                 ).alias("pk")
             )
             return _local_pagerank_sym_packed(packed, iters, top_k=top_k)
-        ed0 = symmetrize(ed0).transform(pin_branch_point)
-        n_edges *= 2
-        pre_deduped = True
-    if n_edges <= local_threshold:
         # kernel dedups in-task unless told not to, so raw (possibly
         # duplicated) pairs are fine
         return _local_pagerank(ed0, iters, pre_deduped=pre_deduped, top_k=top_k)
+    if kernel_symmetrize:
+        ed0 = symmetrize(ed0).transform(pin_branch_point)
+        pre_deduped = True
     # distributed rounds double-count degree on duplicate edges — dedup
     # here unless the caller already guarantees uniqueness (the shared
     # supply-pair checkpoint), which saves the |E| dedup shuffle
@@ -473,7 +485,7 @@ def pagerank(
     # Past the budget (billions of nodes), the edge list pre-partitions
     # on src once and the iterations run as co-partitioned sort-merge
     # joins — the classic Pregel layout.
-    use_bcast = n <= broadcast_max_nodes
+    use_bcast = _broadcast_node_state("pagerank_rank_state", n)
     if not use_bcast:
         ed = ed.repartition("src").transform(pin_branch_point)
     # NOTE on dst-clustering: rounds over a dst-clustered edge list are
@@ -609,7 +621,12 @@ def shared_supply_sym_dst(spark: SparkSession, sf: str) -> DataFrame:
     def build() -> DataFrame:
         return symmetrize(shared_supply_pairs(spark, sf)).repartition("dst")
 
-    if 2 * shared_supply_pairs_count(spark, sf) > SUPPLY_SYM_DST_PIN_MAX_EDGES:
+    tier = choose_tier(
+        "supply_sym_dst_pin",
+        [("pinned", SUPPLY_SYM_DST_PIN_MAX_EDGES), ("unpinned", None)],
+        n_edges=2 * shared_supply_pairs_count(spark, sf),
+    )
+    if tier == "unpinned":
         return build()
     return session_checkpoint(spark, ("supply_sym_dst", sf), build)
 
@@ -700,16 +717,24 @@ def _pagerank_oracle(iters: int = PR_ITERS) -> str:
 )
 def q_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     n_pairs = shared_supply_pairs_count(spark, sf)
-    if (
-        2 * n_pairs > PR_KERNEL_MAX_EDGES  # past the single-task kernel break-even
-        and 2 * n_pairs <= SUPPLY_SYM_DST_PIN_MAX_EDGES  # pin budget
-    ):
+    # "generic" delegates to pagerank(): its single-task kernel under
+    # the break-even, its own per-query pins past the sym-dst pin budget
+    tier = choose_tier(
+        "pagerank_supply_graph",
+        [
+            ("generic", PR_KERNEL_MAX_EDGES),
+            ("scaffold_rounds", SUPPLY_SYM_DST_PIN_MAX_EDGES),
+            ("generic", None),
+        ],
+        n_edges=2 * n_pairs,
+    )
+    if tier == "scaffold_rounds":
         # distributed regime over the session-scaffolded graph: the
         # symmetrize + dedup + clustering exchanges are session-shared
         # builds, so this query's wall is the round loop only (r10
         # lever — sf1 paired medians 4.7 s -> ~2.0 s vs DuckDB 1.5)
         n = shared_supply_nodes_count(spark, sf)
-        if n <= 8_000_000:  # broadcast-regime rank state budget
+        if _broadcast_node_state("pagerank_rank_state", n):
             ranks = _pr_rounds(
                 shared_supply_sym_dst(spark, sf),
                 shared_supply_nodes(spark, sf),
@@ -911,7 +936,7 @@ def q_triangles(spark: SparkSession, sf: str) -> DataFrame:
 
 # Kernel-tier budget for the Arrow CSR wedge kernel (r12), pinned by a
 # MEASURED crossover against the broadcast-fusion join tier
-# (interleaved medians, old tier forced via kernel_max_edges=0):
+# (interleaved medians, old tier forced with a zero kernel budget):
 #   1.2 M edges (sf0.1):  join 8.14 s  vs kernel 4.03 s  — kernel 2x
 #   3.6 M edges (sf0.3):  join 11.2 s  vs kernel 8.2 s   — kernel wins
 #   12 M edges  (sf1):    join 24.8 s  vs kernel 30.0 s  — kernel loses
@@ -1114,12 +1139,7 @@ def _triangle_csr_kernel_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_counts_from_edges(
-    edges: DataFrame,
-    broadcast_max_edges: int = TRIANGLE_BROADCAST_MAX_EDGES,
-    closing_broadcast_max_edges: int = TRIANGLE_CLOSING_BROADCAST_MAX_EDGES,
-    kernel_max_edges: int = TRIANGLE_KERNEL_MAX_EDGES,
-) -> DataFrame:
+def triangle_counts_from_edges(edges: DataFrame) -> DataFrame:
     """(n_edges, n_wedges, n_triangles) of an undirected edge list via
     Schank-Wagner degree orientation; the physical strategy dispatches
     on |E| at runtime: at or under TRIANGLE_KERNEL_MAX_EDGES the whole
@@ -1133,21 +1153,17 @@ def triangle_counts_from_edges(
     # orientation is 1:1, so this is the same dispatch count the join
     # tiers used to take on the oriented list)
     n_edges = edges.count()
-    log_event(
-        LOG_MESSAGE_STRATEGY_DISPATCH,
-        stage="triangle_closure",
+    tier = choose_tier(
+        "triangle_closure",
+        [
+            ("arrow_csr_kernel", TRIANGLE_KERNEL_MAX_EDGES),
+            ("broadcast_fusion", TRIANGLE_BROADCAST_MAX_EDGES),
+            ("closing_broadcast", TRIANGLE_CLOSING_BROADCAST_MAX_EDGES),
+            ("copartitioned_shuffle", None),
+        ],
         n_edges=n_edges,
-        strategy=(
-            "arrow_csr_kernel"
-            if 0 < n_edges <= kernel_max_edges
-            else "broadcast_fusion"
-            if n_edges <= broadcast_max_edges
-            else "closing_broadcast"
-            if n_edges <= closing_broadcast_max_edges
-            else "copartitioned_shuffle"
-        ),
     )
-    if 0 < n_edges <= kernel_max_edges:
+    if tier == "arrow_csr_kernel":
         return _triangle_csr_kernel_counts(edges)
     deg = (
         edges.select(F.col("u").alias("node"))
@@ -1177,64 +1193,46 @@ def triangle_counts_from_edges(
         (F.col("e1.dst_d") == F.col("e2.dst_d"))
         & (F.col("e1.dst") < F.col("e2.dst"))
     )
-    pair_key = F.col("b") * F.lit(1 << 32) + F.col("c")
+    # The probe packs (src, dst) into ONE long (node ids fit 32 bits), so
+    # a broadcast ships a single column and the hash probe compares one
+    # word. The join tiers differ only in what they broadcast:
+    # - broadcast_fusion: BOTH the e2 wedge side and the closing probe.
+    #   |E| is broadcast-sized while the wedge stream is not (~34x
+    #   larger), so wedge generation, the closing probe and the counting
+    #   run in one shuffle-free codegen stage; wedges are counted
+    #   in-flight, never shuffled or materialized.
+    # - closing_broadcast: the 3-column e2 side no longer fits, but the
+    #   single-column closing probe still does (~24 B/edge hashed, 40 M
+    #   edges ≈ 1 GB per executor). The wedge join co-partitions on src
+    #   (one |E| exchange per side) and the wedge stream — 30-100x |E|
+    #   on co-purchase graphs — is still counted in-flight, never
+    #   shuffled. Measured sf3 (36 M oriented edges, 3.7 G wedges): the
+    #   full sort-merge tier shuffles the wedges and takes 427 s; this
+    #   tier removes that shuffle.
+    # - copartitioned_shuffle: past even the closing budget a multi-GB
+    #   broadcast OOMs the executors; wedges close with a pk-keyed
+    #   sort-merge join against the oriented list. Wedges do shuffle
+    #   here — the price of not holding |E| per task, and it scales
+    #   horizontally with partition count.
+    wedge_side = F.broadcast(e2) if tier == "broadcast_fusion" else e2
     closing = oriented.select(
         (F.col("src") * F.lit(1 << 32) + F.col("dst")).alias("pk"),
         F.lit(1).alias("_hit"),
     )
-    if n_edges <= broadcast_max_edges:
-        # Broadcast fusion: |E| is broadcast-sized while the wedge stream
-        # is not (~34x larger here) — broadcasting BOTH the e2 wedge side
-        # and the packed-key closing probe keeps wedge generation, the
-        # closing probe and the counting in one shuffle-free codegen
-        # stage over the oriented edge partitions; wedges are counted
-        # in-flight, never shuffled or materialized. The probe packs
-        # (src, dst) into ONE long (node ids fit 32 bits) so the
-        # broadcast ships a single column and the hash probe compares
-        # one word.
-        wedges = e1.join(
-            F.broadcast(e2), (F.col("e1.src") == F.col("e2.src")) & ordered
-        ).select(F.col("e1.dst").alias("b"), F.col("e2.dst").alias("c"))
-        probed = wedges.withColumn("pk", pair_key).join(
-            F.broadcast(closing), "pk", "left"
-        )
-    elif n_edges <= closing_broadcast_max_edges:
-        # Middle tier: the 3-column e2 wedge side no longer fits the
-        # broadcast budget, but the SINGLE-column packed closing probe
-        # still does (~24 B/edge of hashed relation — 40 M edges ≈
-        # 1 GB, one copy per executor). Co-partition the wedge join on
-        # src (one exchange of |E| each side) and probe the broadcast
-        # closing set IN the wedge stage: the wedge stream — 30-100x
-        # |E| on co-purchase graphs — is counted in-flight and NEVER
-        # shuffled. Measured sf3 (36 M oriented edges, 3.7 G wedges):
-        # the full sort-merge path below shuffles the wedges and takes
-        # 427 s; this tier removes that shuffle.
-        wedges = e1.join(
-            e2, (F.col("e1.src") == F.col("e2.src")) & ordered
-        ).select(F.col("e1.dst").alias("b"), F.col("e2.dst").alias("c"))
-        probed = wedges.withColumn("pk", pair_key).join(
-            F.broadcast(closing), "pk", "left"
-        )
-    else:
-        # Past even the closing budget a multi-GB |E| broadcast OOMs
-        # the executors; co-partition both wedge sides on src (one
-        # exchange each, reused by the sort-merge join) and close
-        # wedges with a pk-keyed sort-merge join against the oriented
-        # list. Wedges do shuffle here — that is the price of not
-        # holding |E| per task, and it scales horizontally with
-        # partition count.
-        wedges = e1.join(
-            e2, (F.col("e1.src") == F.col("e2.src")) & ordered
-        ).select(F.col("e1.dst").alias("b"), F.col("e2.dst").alias("c"))
-        probed = wedges.withColumn("pk", pair_key).join(closing, "pk", "left")
+    if tier != "copartitioned_shuffle":
+        closing = F.broadcast(closing)
+    wedges = e1.join(
+        wedge_side, (F.col("e1.src") == F.col("e2.src")) & ordered
+    ).select(F.col("e1.dst").alias("b"), F.col("e2.dst").alias("c"))
+    probed = wedges.withColumn(
+        "pk", F.col("b") * F.lit(1 << 32) + F.col("c")
+    ).join(closing, "pk", "left")
     # wedge total and closed-wedge (triangle) total in ONE pass: a left
     # probe into the oriented list, counted both ways — a separate
     # semi-join branch would pay the whole wedge join twice
     n_wt = probed.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_wedges"),
-        F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
-        .cast("bigint")
-        .alias("n_triangles"),
+        F.coalesce(F.sum("_hit"), F.lit(0)).cast("bigint").alias("n_triangles"),
     )
     return n_wt.select(
         F.lit(n_edges).cast("bigint").alias("n_edges"), "n_wedges", "n_triangles"
@@ -1256,6 +1254,16 @@ KCORE_ROUNDS = 3
 # whose FIXED cost dominates these aggregate-output queries. Past the
 # budget the distributed loops below are unchanged (the 100 TB path).
 GRAPH_LOCAL_KERNEL_MAX_EDGES = 16_000_000
+
+
+def _use_graph_kernel(stage: str, n_pairs: int) -> bool:
+    """The local-numpy vs distributed-rounds decision of the supply-graph
+    kernels (see GRAPH_LOCAL_KERNEL_MAX_EDGES)."""
+    tiers = [
+        ("local_numpy_kernel", GRAPH_LOCAL_KERNEL_MAX_EDGES),
+        ("distributed_rounds", None),
+    ]
+    return choose_tier(stage, tiers, n_edges=n_pairs) == "local_numpy_kernel"
 
 
 def _kcore_oracle() -> str:
@@ -1319,25 +1327,9 @@ def _kcore_oracle() -> str:
     "integer counts, none of the per-round job launches.",
     _kcore_oracle(),
 )
-def q_kcore(
-    spark: SparkSession,
-    sf: str,
-    broadcast_max_nodes: int = 8_000_000,
-    kernel_max_edges: int = GRAPH_LOCAL_KERNEL_MAX_EDGES,
-) -> DataFrame:
+def q_kcore(spark: SparkSession, sf: str) -> DataFrame:
     pairs = shared_supply_pairs(spark, sf)
-    n_pairs = shared_supply_pairs_count(spark, sf)
-    log_event(
-        LOG_MESSAGE_STRATEGY_DISPATCH,
-        stage="kcore_peel",
-        n_edges=n_pairs,
-        strategy=(
-            "local_numpy_kernel"
-            if 0 < n_pairs <= kernel_max_edges
-            else "distributed_rounds"
-        ),
-    )
-    if 0 < n_pairs <= kernel_max_edges:
+    if _use_graph_kernel("kcore_peel", shared_supply_pairs_count(spark, sf)):
         # kernel tier (see GRAPH_LOCAL_KERNEL_MAX_EDGES): one collect of
         # the pinned scaffold, then the identical peel vectorized —
         # bincount degrees, boolean keep mask, edge-alive mask; exact
@@ -1380,10 +1372,11 @@ def q_kcore(
         # the materializing action AND the broadcast-dispatch sensor
         keep = keep.transform(pin_branch_point)
         n_nodes = keep.count()
+        use_bcast = _broadcast_node_state("kcore_keep", n_nodes)
 
         def _keep_as(col: str):
             k = keep.withColumnRenamed("node", col)
-            return F.broadcast(k) if n_nodes <= broadcast_max_nodes else k
+            return F.broadcast(k) if use_bcast else k
 
         # the peeled edge list stays LAZY (the bfs_layers item-18
         # lever): every input is pinned — the scaffold edge list and
@@ -1451,24 +1444,9 @@ def _bfs_oracle() -> str:
     "none of the per-round join/count job launches.",
     _bfs_oracle(),
 )
-def q_bfs_layers(
-    spark: SparkSession,
-    sf: str,
-    kernel_max_edges: int = GRAPH_LOCAL_KERNEL_MAX_EDGES,
-) -> DataFrame:
+def q_bfs_layers(spark: SparkSession, sf: str) -> DataFrame:
     pairs = shared_supply_pairs(spark, sf)
-    n_pairs = shared_supply_pairs_count(spark, sf)
-    log_event(
-        LOG_MESSAGE_STRATEGY_DISPATCH,
-        stage="bfs_layers",
-        n_edges=n_pairs,
-        strategy=(
-            "local_numpy_kernel"
-            if 0 < n_pairs <= kernel_max_edges
-            else "distributed_rounds"
-        ),
-    )
-    if 0 < n_pairs <= kernel_max_edges:
+    if _use_graph_kernel("bfs_layers", shared_supply_pairs_count(spark, sf)):
         # kernel tier (see GRAPH_LOCAL_KERNEL_MAX_EDGES): collect the
         # pinned scaffold once and run the identical frontier expansion
         # as boolean masks over compressed node ids — per round one

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from geostore_spark.registry import register
 from geostore_spark.sources.tables import load_table
 from geostore_spark.operators.util import (
+    choose_tier,
     limb_sum_aggs,
     limb_total_expr,
     pin_branch_point,
@@ -2238,11 +2239,12 @@ def stats_theil_sen(spark: SparkSession, sf: str) -> DataFrame:
                 winner = bid
                 break
             below += c
-        win_rows = p.filter(bucket == winner)
-        win_count = dict(hist)[winner]
-        if win_count <= TS_WINNER_MAX:
+        tiers = [("winner_bucket", TS_WINNER_MAX), ("two_phase_rank", None)]
+        tier = choose_tier("theil_sen_select", tiers, n_rows=dict(hist)[winner])
+        if tier == "winner_bucket":
             picked = (
-                win_rows.orderBy("slope", "da", "db")
+                p.filter(bucket == winner)
+                .orderBy("slope", "da", "db")
                 .limit(k - below)
                 .orderBy(F.col("slope").desc(), F.col("da").desc(), F.col("db").desc())
                 .limit(1)

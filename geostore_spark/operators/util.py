@@ -7,6 +7,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from geostore_spark.logging_keys import LOG_MESSAGE_STRATEGY_DISPATCH, log_event
+
 # Session-scoped checkpoint registry (the pattern proven on
 # ml.shared_kmeans_assignment): intermediate tables that several
 # registered queries re-derive — the deduped supply-graph edge list, a
@@ -274,6 +276,28 @@ def session_scalar(spark: SparkSession, key: tuple, build: Callable[[], object])
         return val
 
 
+def choose_tier(stage: str, tiers: list[tuple[str, int | None]], **sensor) -> str:
+    """The engine's one size-dispatch rule: ``tiers`` is an ordered list
+    of ``(name, budget)`` whose last budget is ``None``, and the first
+    tier whose budget is >= the sensor value wins. ``sensor`` is one
+    ``field=value`` pair — the size the call site already measured (a
+    footer row count, a memoized scaffold count, a count that also
+    materializes a pin), never a job of its own; ``None`` (size
+    unknown) takes the last, unbounded tier. Emits the decision as the
+    stage's one ``LOG_MESSAGE_STRATEGY_DISPATCH`` event with ``stage``,
+    ``strategy`` and the sensor under its field name.
+
+    Budgets are module constants read at the call, so a test forces a
+    tier by monkeypatching the constant to -1 or 0."""
+    (value,) = sensor.values()
+    name = next(
+        n for n, budget in tiers
+        if budget is None or (value is not None and value <= budget)
+    )
+    log_event(LOG_MESSAGE_STRATEGY_DISPATCH, stage=stage, strategy=name, **sensor)
+    return name
+
+
 def local_rows_df(spark: SparkSession, rows, schema_ddl: str) -> DataFrame:
     """``createDataFrame`` for small driver-side row lists via the
     pandas/Arrow branch. The plain list branch runs per-row schema
@@ -282,7 +306,10 @@ def local_rows_df(spark: SparkSession, rows, schema_ddl: str) -> DataFrame:
     slice of the graph kernels' cold bench rows); the Arrow branch is
     ~0.1 s cold. Handles the int/long/double/string/array<int> DDL
     subset the kernel-result, rule-table and traversal sites use,
-    falling back to the list branch for anything richer."""
+    falling back to the list branch for anything richer, and for
+    values the numpy cast cannot carry: a None in an integer column
+    (a typed null there) or an integer outside the column's range (a
+    schema error there, where ``astype`` would wrap it silently)."""
     import pandas as pd
 
     dtypes = {
@@ -301,9 +328,16 @@ def local_rows_df(spark: SparkSession, rows, schema_ddl: str) -> DataFrame:
             cols.append((name, dtypes[typ.lower()]))
     except (KeyError, ValueError):
         return spark.createDataFrame(rows, schema_ddl)
-    pdf = pd.DataFrame(list(rows), columns=[c for c, _ in cols])
-    for c, dt in cols:
-        pdf[c] = pdf[c].astype(dt)
+    rows = list(rows)
+    pdf = pd.DataFrame(rows, columns=[c for c, _ in cols])
+    try:
+        for c, dt in cols:
+            cast = pdf[c].astype(dt)
+            if dt.startswith("int") and not cast.eq(pdf[c]).all():
+                raise OverflowError(c)
+            pdf[c] = cast
+    except (TypeError, ValueError, OverflowError):
+        return spark.createDataFrame(rows, schema_ddl)
     # the DDL rides along explicitly: createDataFrame(pdf) alone raises
     # CANNOT_INFER_EMPTY_SCHEMA on a zero-row frame (r12 review), where
     # the list branch this replaces returned an empty typed frame
@@ -385,7 +419,7 @@ def distributed_row_number(
     the ranks come from a plain ``ROW_NUMBER() OVER (PARTITION BY
     part_cols ORDER BY order_cols)`` window — identical values, one
     ordinary hash exchange, no range sampling / pin / offset broadcast.
-    ``None`` (the default) keeps the two-phase plan unconditionally.
+    ``None`` (the default) takes the two-phase plan.
 
     ``ROW_NUMBER() OVER (PARTITION BY k ORDER BY ...)`` parallelizes by
     ``k`` — with 5 distinct segments that is a 5-task ceiling and
@@ -412,7 +446,8 @@ def distributed_row_number(
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    if row_count is not None and row_count <= RANK_LOCAL_THRESHOLD:
+    tiers = [("window", RANK_LOCAL_THRESHOLD), ("two_phase", None)]
+    if choose_tier("row_number", tiers, n_rows=row_count) == "window":
         # NO pin on this tier: the two-phase pin exists to keep both
         # consumers on ONE sampled RangePartitioning; the plain window
         # has no sampling — hash partitioning and the total order
@@ -499,7 +534,8 @@ def distributed_prefix_sum(
     from pyspark.sql.window import Window
 
     vals = {val_col: out_name, **(also or {})}
-    if row_count is not None and row_count <= RANK_LOCAL_THRESHOLD:
+    tiers = [("window", RANK_LOCAL_THRESHOLD), ("two_phase", None)]
+    if choose_tier("prefix_sum", tiers, n_rows=row_count) == "window":
         w = (
             Window.partitionBy(*part_cols)
             .orderBy(*order_cols)

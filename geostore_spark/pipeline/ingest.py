@@ -153,10 +153,9 @@ def _copy_with_retry(
             _copy_once(src, dst, fault_dir, openers)
             return RESULT_CODE_SUCCEEDED, attempt, message
         except RETRYABLE_ERRORS as err:
-            # one classification for BOTH import paths (object_store's
-            # per-attempt protocol and this one-row-per-object form): a
-            # registered cloud opener signalling TemporaryObjectStoreError
-            # (e.g. S3Opener on RequestTimeout) retries here too
+            # a registered cloud opener signalling
+            # TemporaryObjectStoreError (e.g. S3Opener on RequestTimeout)
+            # retries like an injected timeout
             message = f"{RETRY_RESULT_STRING} ({err})"
             continue
         except OSError as err:

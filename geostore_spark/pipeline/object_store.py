@@ -1,55 +1,23 @@
-"""Object-store openers + per-object import outcomes for the io seam.
+"""Object-store openers for the io seam.
 
-Closes the two cloud-IO gaps the r8 verdict named:
-
-1. **Shipped openers.** ``S3Opener`` is the boto3-style opener for
-   ``s3://`` — picklable (captures config strings only; the client
-   builds lazily per worker, the standard boto3-under-Spark pattern),
-   import-gated for environments without boto3. ``FallbackOpener``
-   wraps ANY inner opener with the reference's staging→storage
-   fallback: a URL missing at its staging location is re-read from the
-   durable storage location derived exactly as
-   ``/root/reference/geostore/s3_utils.py:30-57`` derives it
-   (``{dataset_title}/{basename(url)}`` under the storage base).
-   Register either through :mod:`geostore_spark.pipeline.io` and every
-   pipeline read (traversal, checksums, ingest copies) follows.
-
-2. **Per-object retry outcomes as data.** The reference records each
-   S3 batch copy's outcome — Succeeded / temporary-failure (retried by
-   the batch service) / permanent-failure — as task result rows
-   (``/root/reference/geostore/import_dataset_file.py:46-99``, result
-   codes + ``RETRY_RESULT_STRING``). Spark task retries subsume the
-   *mechanics*, but the outcome ROWS were not queryable; here
-   :func:`import_files_with_outcomes` copies every (src, dst) pair in
-   a distributed pass and emits one row PER ATTEMPT, so "what retried,
-   what gave up, why" is a DataFrame query, with the retry cap explicit.
+``S3Opener`` is the boto3-style opener for ``s3://`` — picklable
+(captures config strings only; the client builds lazily per worker, the
+standard boto3-under-Spark pattern), import-gated for environments
+without boto3. ``FallbackOpener`` wraps ANY inner opener with the
+reference's staging→storage fallback: a URL missing at its staging
+location is re-read from the durable storage location derived exactly
+as the reference's ``geostore/s3_utils.py:30-57`` derives it
+(``{dataset_title}/{basename(url)}`` under the storage base). Register
+either through :mod:`geostore_spark.pipeline.io` and every pipeline
+read (traversal, checksums, ingest copies) follows. The asset-copy
+retry protocol that classifies their errors is
+``pipeline.ingest._copy_with_retry``.
 """
 
 from __future__ import annotations
 
 from posixpath import basename
 from urllib.parse import urlparse
-
-from pyspark.sql import DataFrame
-
-from geostore_spark.pipeline.io import open_url, opener_snapshot
-
-# Outcome vocabulary — the reference's S3 Batch result codes
-# (import_dataset_file.py: RESULT_CODE_SUCCEEDED / _TEMPORARY_FAILURE /
-# _PERMANENT_FAILURE) plus the engine's explicit cap marker: the batch
-# service re-drives temporary failures invisibly, so "gave up at the
-# cap" needs its own queryable code here.
-RESULT_SUCCEEDED = "Succeeded"
-RESULT_RETRY = "TemporaryFailure"
-RESULT_GIVEN_UP = "GivenUp"
-RESULT_PERMANENT = "PermanentFailure"
-RETRY_RESULT_STRING = "Retry request to object store due to timeout."
-MAX_IMPORT_ATTEMPTS = 3
-
-OUTCOME_SCHEMA = (
-    "src_url string, dst_url string, attempt int, "
-    "result_code string, result_string string"
-)
 
 
 class TemporaryObjectStoreError(Exception):
@@ -58,8 +26,8 @@ class TemporaryObjectStoreError(Exception):
     TimeoutError and ConnectionError are treated the same way."""
 
 
-# shared with pipeline.ingest's copy protocol so a registered cloud
-# opener's transient failures retry in BOTH import paths
+# the errors pipeline.ingest's copy protocol retries, so a registered
+# cloud opener's transient failures retry there
 RETRYABLE_ERRORS = (TemporaryObjectStoreError, TimeoutError, ConnectionError)
 
 
@@ -140,80 +108,3 @@ class FallbackOpener:
             return self.inner(url, mode)
         except FileNotFoundError:
             return self.inner(self.storage_url(url), mode)
-
-
-def _copy_once(src: str, dst: str, openers: dict) -> None:
-    with open_url(src, "rb", openers) as fin:
-        with open_url(dst, "wb", openers) as fout:
-            while True:
-                chunk = fin.read(1 << 20)
-                if not chunk:
-                    break
-                fout.write(chunk)
-
-
-def import_files_with_outcomes(
-    pairs: DataFrame,
-    max_attempts: int = MAX_IMPORT_ATTEMPTS,
-) -> DataFrame:
-    """Copy every (``src_url``, ``dst_url``) row through the opener seam
-    and return the per-ATTEMPT outcome rows.
-
-    One output row per attempt: retried attempts record
-    ``TemporaryFailure`` with the reference's retry message, the final
-    failed retry records ``GivenUp`` (the explicit cap the reference
-    delegates to the S3 Batch service), non-retryable errors record
-    ``PermanentFailure`` with ``{code}: {message}`` — the queryable form
-    of import_dataset_file.py:46-99's result protocol. Distribution:
-    one Arrow pass over the pair list, each partition copying its own
-    objects; outcome volume is O(pairs × cap), aggregate-sized.
-    """
-    import pandas as pd
-
-    openers = opener_snapshot()  # picklable; ships in the task closure
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for src, dst in zip(pdf["src_url"], pdf["dst_url"]):
-                for attempt in range(1, max_attempts + 1):
-                    try:
-                        _copy_once(src, dst, openers)
-                        rows.append(
-                            (src, dst, attempt, RESULT_SUCCEEDED, "")
-                        )
-                        break
-                    except RETRYABLE_ERRORS as e:
-                        if attempt < max_attempts:
-                            code, msg = RESULT_RETRY, RETRY_RESULT_STRING
-                        else:
-                            code, msg = RESULT_GIVEN_UP, (
-                                f"gave up after {max_attempts} attempts:"
-                                f" {e!r}"
-                            )
-                        rows.append((src, dst, attempt, code, msg))
-                    except Exception as e:
-                        rows.append(
-                            (
-                                src,
-                                dst,
-                                attempt,
-                                RESULT_PERMANENT,
-                                f"{type(e).__name__}: {e}",
-                            )
-                        )
-                        break
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "src_url",
-                    "dst_url",
-                    "attempt",
-                    "result_code",
-                    "result_string",
-                ],
-            )
-
-    return pairs.select("src_url", "dst_url").mapInPandas(
-        run, OUTCOME_SCHEMA
-    )

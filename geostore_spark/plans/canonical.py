@@ -1141,13 +1141,13 @@ def a9(spark: SparkSession, sf: str) -> DataFrame:
     # lo + frac*(hi - lo) formula as DuckDB's quantile_cont. Only the
     # <= 6 rows sitting AT a cut position survive the rank filter, so
     # the final aggregate is constant-size per group.
-    from geostore_spark.operators.util import distributed_row_number
-
     from geostore_spark.operators.dedup import _count_rows_cheap
+    from geostore_spark.operators.util import choose_tier, distributed_row_number
 
     o = load_table(spark, "orders", sf).select("o_orderstatus", "o_totalprice")
     n_orders = _count_rows_cheap(o)
-    if n_orders <= A9_LOCAL_THRESHOLD:
+    tiers = [("local_kernel", A9_LOCAL_THRESHOLD), ("distributed_rank", None)]
+    if choose_tier("a9_quantiles", tiers, n_orders=n_orders) == "local_kernel":
         return _a9_local(o)
     ranked, counts = distributed_row_number(
         o, ["o_orderstatus"], ["o_totalprice"], "rn",

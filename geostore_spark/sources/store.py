@@ -809,6 +809,7 @@ class MetadataStore:
         construction (recorded feeds are net-collapsed at commit)."""
         if to_version is None:
             to_version = self.current_version(table)
+        feed = None
         if to_version == from_version + 1:
             recorded = self._recorded_changes(table, to_version)
             if recorded is not None:
@@ -827,40 +828,21 @@ class MetadataStore:
                 for v in range(from_version + 1, to_version + 1)
             ]
             if all(f is not None for f in feeds):
-                out = feeds[0]
+                feed = feeds[0]
                 for f in feeds[1:]:
-                    out = out.unionByName(f, allowMissingColumns=True)
-                cols = [
-                    c
-                    for c in out.columns
-                    if c not in ("_change_type", "_commit_version")
-                ]
-                return self._net_collapse(out, cols).withColumn(
-                    "_commit_version", F.lit(to_version)
-                )
-        old = self.read(table, from_version).withColumn("__side", F.lit(-1))
-        new = self.read(table, to_version).withColumn("__side", F.lit(1))
-        both = old.unionByName(new, allowMissingColumns=True)
-        cols = [c for c in both.columns if c != "__side"]
-        delta = (
-            both.groupBy(*cols)
-            .agg(F.sum("__side").alias("__delta"))
-            .filter(F.col("__delta") != 0)
-        )
-        return (
-            delta.withColumn(
-                "_change_type",
-                F.when(F.col("__delta") > 0, F.lit("insert")).otherwise(
-                    F.lit("delete")
-                ),
+                    feed = feed.unionByName(f, allowMissingColumns=True)
+                feed = feed.drop("_commit_version")
+        if feed is None:
+            # generic two-snapshot diff: the old snapshot as deletes, the
+            # new one as inserts, net-collapsed like a recorded feed
+            old = self.read(table, from_version).withColumn(
+                "_change_type", F.lit("delete")
             )
-            # emit |delta| copies so multiplicity shifts stay row-level
-            .withColumn(
-                "__rep",
-                F.explode(
-                    F.array_repeat(F.lit(1), F.abs(F.col("__delta")).cast("int"))
-                ),
+            new = self.read(table, to_version).withColumn(
+                "_change_type", F.lit("insert")
             )
-            .drop("__delta", "__rep")
-            .withColumn("_commit_version", F.lit(to_version))
+            feed = old.unionByName(new, allowMissingColumns=True)
+        cols = [c for c in feed.columns if c != "_change_type"]
+        return self._net_collapse(feed, cols).withColumn(
+            "_commit_version", F.lit(to_version)
         )

@@ -61,7 +61,8 @@ def test_verify_join_dispatch_logged_both_ways(spark, logcap):
     assert evs and all(e["strategy"] == "shuffle" for e in evs)
 
 
-def test_triangle_dispatch_logged_both_ways(spark, logcap):
+def test_triangle_dispatch_logged_both_ways(spark, logcap, monkeypatch):
+    from geostore_spark.operators import graph
     from geostore_spark.operators.graph import triangle_counts_from_edges
 
     edges = spark.createDataFrame(
@@ -72,25 +73,26 @@ def test_triangle_dispatch_logged_both_ways(spark, logcap):
     assert ev["strategy"] == "arrow_csr_kernel" and ev["n_edges"] == 3
 
     logcap.clear()
-    triangle_counts_from_edges(edges, kernel_max_edges=0)
+    monkeypatch.setattr(graph, "TRIANGLE_KERNEL_MAX_EDGES", 0)
+    triangle_counts_from_edges(edges)
     [ev] = [e for e in _dispatches(logcap) if e["stage"] == "triangle_closure"]
     assert ev["strategy"] == "broadcast_fusion"
 
     logcap.clear()
-    triangle_counts_from_edges(edges, kernel_max_edges=0, broadcast_max_edges=0)
+    monkeypatch.setattr(graph, "TRIANGLE_BROADCAST_MAX_EDGES", 0)
+    triangle_counts_from_edges(edges)
     [ev] = [e for e in _dispatches(logcap) if e["stage"] == "triangle_closure"]
     assert ev["strategy"] == "closing_broadcast"
 
     logcap.clear()
-    triangle_counts_from_edges(
-        edges, kernel_max_edges=0, broadcast_max_edges=0,
-        closing_broadcast_max_edges=0,
-    )
+    monkeypatch.setattr(graph, "TRIANGLE_CLOSING_BROADCAST_MAX_EDGES", 0)
+    triangle_counts_from_edges(edges)
     [ev] = [e for e in _dispatches(logcap) if e["stage"] == "triangle_closure"]
     assert ev["strategy"] == "copartitioned_shuffle"
 
 
-def test_connected_components_dispatch_logged(spark, logcap):
+def test_connected_components_dispatch_logged(spark, logcap, monkeypatch):
+    from geostore_spark.operators import graph
     from geostore_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "a long, b long")
@@ -99,7 +101,8 @@ def test_connected_components_dispatch_logged(spark, logcap):
     assert ev["strategy"] == "local_union_find"
 
     logcap.clear()
-    connected_components(edges, "a", "b", local_threshold=0)
+    monkeypatch.setattr(graph, "CC_LOCAL_MAX_EDGES", 0)
+    connected_components(edges, "a", "b")
     [ev] = [e for e in _dispatches(logcap) if e["stage"] == "connected_components"]
     assert ev["strategy"] == "min_label_rounds"
 

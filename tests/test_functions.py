@@ -218,3 +218,20 @@ def test_local_rows_df_handles_empty_and_typed_rows(spark):
     # richer DDL falls back to the list branch
     m = local_rows_df(spark, [([1, 2],)], "xs array<int>")
     assert m.collect()[0]["xs"] == [1, 2]
+
+
+def test_local_rows_df_falls_back_on_uncastable_ints(spark):
+    """A value the numpy cast cannot carry goes through the list branch:
+    an int column never wraps a value outside int32 into a wrong number
+    (the list branch rejects it), and a None in an int column becomes a
+    typed null instead of raising."""
+    import pytest
+
+    from geostore_spark.operators.util import local_rows_df
+
+    with pytest.raises(Exception, match="VALUE_OUT_OF_BOUNDS"):
+        local_rows_df(spark, [(1,), (1 << 40,)], "x int").collect()
+    nulls = local_rows_df(spark, [(1, 2), (None, None)], "a int, b long")
+    assert {tuple(r) for r in nulls.collect()} == {(1, 2), (None, None)}
+    only_null = local_rows_df(spark, [(None,)], "a int")
+    assert [tuple(r) for r in only_null.collect()] == [(None,)]

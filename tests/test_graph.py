@@ -2,7 +2,7 @@
 
 Both physical strategies are pinned: the single-task union-find fast path
 (default at this size) and the distributed min-label + pointer-jumping
-loop (forced via local_threshold=0) must agree with each other and with
+loop (forced with CC_LOCAL_MAX_EDGES = 0) must agree with each other and with
 the reference union-find.
 """
 
@@ -12,6 +12,7 @@ import random
 
 import pytest
 
+from geostore_spark.operators import graph
 from geostore_spark.operators.graph import connected_components
 
 # chain 1-2-3-4 (diameter 3, forces multi-round propagation),
@@ -46,13 +47,12 @@ def _union_find(edges) -> dict[int, int]:
 
 
 @pytest.mark.parametrize("threshold", [10_000_000, 0], ids=["local", "distributed"])
-def test_connected_components_match_union_find(spark, threshold):
+def test_connected_components_match_union_find(spark, threshold, monkeypatch):
+    monkeypatch.setattr(graph, "CC_LOCAL_MAX_EDGES", threshold)
     edges = spark.createDataFrame(EDGES, "src long, dst long")
     got = {
         r["v"]: r["label"]
-        for r in connected_components(
-            edges, "src", "dst", local_threshold=threshold
-        ).collect()
+        for r in connected_components(edges, "src", "dst").collect()
     }
     assert got == _union_find(EDGES)
     # the chain's far end reached the minimum despite no direct edge
@@ -60,10 +60,11 @@ def test_connected_components_match_union_find(spark, threshold):
 
 
 @pytest.mark.parametrize("threshold", [10_000_000, 0], ids=["local", "distributed"])
-def test_connected_components_converges_on_single_edge(spark, threshold):
+def test_connected_components_converges_on_single_edge(spark, threshold, monkeypatch):
+    monkeypatch.setattr(graph, "CC_LOCAL_MAX_EDGES", threshold)
     edges = spark.createDataFrame([(7, 5)], "src long, dst long")
     rows = (
-        connected_components(edges, "src", "dst", local_threshold=threshold)
+        connected_components(edges, "src", "dst")
         .orderBy("v")
         .collect()
     )
@@ -93,24 +94,23 @@ def _pagerank_reference(edges, iters: int) -> dict[int, int]:
 
 
 @pytest.mark.parametrize("threshold", [10_000_000, 0], ids=["local", "distributed"])
-def test_pagerank_matches_python_reference(spark, threshold):
+def test_pagerank_matches_python_reference(spark, threshold, monkeypatch):
     from geostore_spark.operators.graph import pagerank
 
+    monkeypatch.setattr(graph, "PR_KERNEL_MAX_EDGES", threshold)
     # symmetric star (hub 1) + chain tail: hub must out-rank leaves
     raw = [(1, 2), (1, 3), (1, 4), (4, 5)]
     edges = [(a, b) for a, b in raw] + [(b, a) for a, b in raw]
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["id"]: r["r"]
-        for r in pagerank(
-            df, "src", "dst", iters=3, local_threshold=threshold
-        ).collect()
+        for r in pagerank(df, "src", "dst", iters=3).collect()
     }
     assert got == _pagerank_reference(edges, 3)
     assert got[1] == max(got.values())
 
 
-def test_strategies_agree_on_random_graph(spark):
+def test_strategies_agree_on_random_graph(spark, monkeypatch):
     rng = random.Random(17)
     edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
     edges = [(a, b) for a, b in edges if a != b]
@@ -119,14 +119,15 @@ def test_strategies_agree_on_random_graph(spark):
         r["v"]: r["label"]
         for r in connected_components(df, "src", "dst").collect()
     }
+    monkeypatch.setattr(graph, "CC_LOCAL_MAX_EDGES", 0)
     loop = {
         r["v"]: r["label"]
-        for r in connected_components(df, "src", "dst", local_threshold=0).collect()
+        for r in connected_components(df, "src", "dst").collect()
     }
     assert fast == loop == _union_find(edges)
 
 
-def test_triangle_strategies_agree_at_volume(spark):
+def test_triangle_strategies_agree_at_volume(spark, monkeypatch):
     """r4 verdict #7: the above-budget sort-merge closure path was only
     ever exercised on a 7-edge toy. Run BOTH physical strategies on the
     real sf0.1 part co-purchase graph (~1.2 M deduped edges) and assert
@@ -152,16 +153,12 @@ def test_triangle_strategies_agree_at_volume(spark):
         .localCheckpoint()
     )
     kernel = triangle_counts_from_edges(edges).collect()[0]  # CSR kernel
-    fused = triangle_counts_from_edges(
-        edges, kernel_max_edges=0
-    ).collect()[0]  # broadcast-fusion join tier
-    middle = triangle_counts_from_edges(
-        edges, kernel_max_edges=0, broadcast_max_edges=0
-    ).collect()[0]  # closing-broadcast tier
-    spilled = triangle_counts_from_edges(
-        edges, kernel_max_edges=0, broadcast_max_edges=0,
-        closing_broadcast_max_edges=0,
-    ).collect()[0]  # full sort-merge tier
+    monkeypatch.setattr(graph, "TRIANGLE_KERNEL_MAX_EDGES", 0)
+    fused = triangle_counts_from_edges(edges).collect()[0]  # broadcast-fusion join tier
+    monkeypatch.setattr(graph, "TRIANGLE_BROADCAST_MAX_EDGES", 0)
+    middle = triangle_counts_from_edges(edges).collect()[0]  # closing-broadcast tier
+    monkeypatch.setattr(graph, "TRIANGLE_CLOSING_BROADCAST_MAX_EDGES", 0)
+    spilled = triangle_counts_from_edges(edges).collect()[0]  # full sort-merge tier
     assert kernel == fused == middle == spilled
     assert fused["n_edges"] > 1_000_000  # really the at-volume graph
     assert fused["n_triangles"] > 0
@@ -170,7 +167,9 @@ def test_triangle_strategies_agree_at_volume(spark):
 @pytest.mark.parametrize(
     "threshold", [10_000_000, 0], ids=["packed-kernel", "distributed"]
 )
-def test_pagerank_kernel_symmetrize_matches_presymmetrized(spark, threshold):
+def test_pagerank_kernel_symmetrize_matches_presymmetrized(
+    spark, threshold, monkeypatch
+):
     """kernel_symmetrize feeds DIRECTED deduped pairs and must produce
     exactly the ranks of the explicitly symmetrized graph, on both the
     packed single-task kernel and the distributed loop."""
@@ -185,6 +184,7 @@ def test_pagerank_kernel_symmetrize_matches_presymmetrized(spark, threshold):
         r["id"]: r["r"]
         for r in pagerank(sym, "src", "dst", iters=3).collect()
     }
+    monkeypatch.setattr(graph, "PR_KERNEL_MAX_EDGES", threshold)
     got = {
         r["id"]: r["r"]
         for r in pagerank(
@@ -193,7 +193,6 @@ def test_pagerank_kernel_symmetrize_matches_presymmetrized(spark, threshold):
             "dst",
             iters=3,
             pre_deduped=True,
-            local_threshold=threshold,
             kernel_symmetrize=True,
         ).collect()
     }
@@ -228,7 +227,7 @@ def test_pagerank_sparse_ids_match_dense(spark):
     assert sparse == {k * BIG: v for k, v in dense.items()}
 
 
-def test_pagerank_sink_nodes_sparse_vs_dense_vs_distributed(spark):
+def test_pagerank_sink_nodes_sparse_vs_dense_vs_distributed(spark, monkeypatch):
     """A dst-only (sink) node must not credit its contribution to any
     other vertex: the sparse np.unique fallback, the dense bincount
     path, and the distributed left-join loop must produce identical
@@ -241,11 +240,12 @@ def test_pagerank_sink_nodes_sparse_vs_dense_vs_distributed(spark):
     BIG = 10_000_000_000  # forces the sparse factorization path
 
     def ranks(pairs, threshold):
+        monkeypatch.setattr(graph, "PR_KERNEL_MAX_EDGES", threshold)
         return {
             r["id"]: r["r"]
             for r in pagerank(
                 spark.createDataFrame(pairs, "src long, dst long"),
-                "src", "dst", iters=3, local_threshold=threshold,
+                "src", "dst", iters=3,
             ).collect()
         }
 
@@ -341,7 +341,7 @@ def test_pagerank_scaffold_pin_budget_falls_back(spark, monkeypatch):
         )
 
 
-def test_kcore_kernel_matches_distributed(spark):
+def test_kcore_kernel_matches_distributed(spark, monkeypatch):
     """r12 two-tier dispatch: the local numpy peel and the distributed
     per-round loop must produce identical (round, n_nodes, n_edges)
     rows — forced both ways on the same fixture graph."""
@@ -349,23 +349,20 @@ def test_kcore_kernel_matches_distributed(spark):
 
     sf = "/root/testdata/sf0.01"
     kernel = sorted(tuple(r) for r in q_kcore(spark, sf).collect())
-    dist = sorted(
-        tuple(r) for r in q_kcore(spark, sf, kernel_max_edges=0).collect()
-    )
+    monkeypatch.setattr(graph, "GRAPH_LOCAL_KERNEL_MAX_EDGES", 0)
+    dist = sorted(tuple(r) for r in q_kcore(spark, sf).collect())
     assert kernel == dist
     assert len(kernel) == 3
 
 
-def test_bfs_kernel_matches_distributed(spark):
+def test_bfs_kernel_matches_distributed(spark, monkeypatch):
     """Same tier-equality pin for the BFS layer profile."""
     from geostore_spark.operators.graph import q_bfs_layers
 
     sf = "/root/testdata/sf0.01"
     kernel = sorted(tuple(r) for r in q_bfs_layers(spark, sf).collect())
-    dist = sorted(
-        tuple(r)
-        for r in q_bfs_layers(spark, sf, kernel_max_edges=0).collect()
-    )
+    monkeypatch.setattr(graph, "GRAPH_LOCAL_KERNEL_MAX_EDGES", 0)
+    dist = sorted(tuple(r) for r in q_bfs_layers(spark, sf).collect())
     assert kernel == dist
     assert len(kernel) == 4
     assert kernel[0][1] > 0  # seeds exist at this SF
@@ -405,7 +402,7 @@ def test_triangle_kernel_empty_collect_returns_zero_row(spark):
     assert (row["n_edges"], row["n_wedges"], row["n_triangles"]) == (0, 0, 0)
 
 
-def test_compact_ids_sends_negative_ids_to_factorization(spark):
+def test_compact_ids_sends_negative_ids_to_factorization(spark, monkeypatch):
     """Negative ids would pass the dense-path size check and break the
     bincount downstream; they must be factorized instead, keeping the
     id order, and the kernel must count their triangle like the join
@@ -424,6 +421,7 @@ def test_compact_ids_sends_negative_ids_to_factorization(spark):
         list(zip(u.tolist(), v.tolist())), "u long, v long"
     ).localCheckpoint()
     kernel = triangle_counts_from_edges(edges).collect()[0]
-    joined = triangle_counts_from_edges(edges, kernel_max_edges=0).collect()[0]
+    monkeypatch.setattr(graph, "TRIANGLE_KERNEL_MAX_EDGES", 0)
+    joined = triangle_counts_from_edges(edges).collect()[0]
     assert kernel["n_triangles"] == joined["n_triangles"] == 1
     assert kernel["n_wedges"] == joined["n_wedges"]

@@ -407,7 +407,7 @@ def test_ks_prefix_sums_are_two_phase(spark):
             assert "_pid" in line, f"global window over data: {line[:200]}"
 
 
-def test_triangles_all_joins_are_equi(spark):
+def test_triangles_all_joins_are_equi(spark, monkeypatch):
     # at fixture size the dispatch picks the Arrow CSR kernel: the final
     # plan is a mapInPandas stage over shard ids plus a 1-row aggregate —
     # no wedge join, no cartesian anywhere
@@ -418,13 +418,15 @@ def test_triangles_all_joins_are_equi(spark):
     # keys (a nested-loop wedge join would mean all-pairs degeneration);
     # the only non-equi shapes allowed are the Cross joins assembling the
     # three 1-row scalar aggregates into the result row
+    from geostore_spark.operators import graph
     from geostore_spark.operators.graph import triangle_counts_from_edges
 
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3)], "u long, v long"
     ).localCheckpoint()
+    monkeypatch.setattr(graph, "TRIANGLE_KERNEL_MAX_EDGES", 0)
     join_plan = (
-        triangle_counts_from_edges(edges, kernel_max_edges=0)
+        triangle_counts_from_edges(edges)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -441,13 +443,14 @@ def test_triangles_all_joins_are_equi(spark):
     )
 
 
-def test_triangles_dispatch_on_edge_budget(spark):
+def test_triangles_dispatch_on_edge_budget(spark, monkeypatch):
     # at or under TRIANGLE_KERNEL_MAX_EDGES the whole wedge+closure runs
     # as the Arrow CSR kernel (mapInPandas, no joins at all); between
     # that and TRIANGLE_BROADCAST_MAX_EDGES the joins fuse as
     # BroadcastHashJoins (shuffle-free counting stage); above the budget
     # the |E| broadcast would OOM at 100x, so the plan must fall back to
     # co-partitioned shuffle joins — each tier forced with zero budgets
+    from geostore_spark.operators import graph
     from geostore_spark.operators.graph import triangle_counts_from_edges
 
     edges = spark.createDataFrame(
@@ -461,24 +464,22 @@ def test_triangles_dispatch_on_edge_budget(spark):
     assert "MapInPandas" in plan_kernel
     assert "Join" not in plan_kernel
 
-    fused = triangle_counts_from_edges(edges, kernel_max_edges=0)
+    monkeypatch.setattr(graph, "TRIANGLE_KERNEL_MAX_EDGES", 0)
+    fused = triangle_counts_from_edges(edges)
     plan_fused = fused._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan_fused
     assert "SortMergeJoin" not in plan_fused
 
-    middle = triangle_counts_from_edges(
-        edges, kernel_max_edges=0, broadcast_max_edges=0
-    )
+    monkeypatch.setattr(graph, "TRIANGLE_BROADCAST_MAX_EDGES", 0)
+    middle = triangle_counts_from_edges(edges)
     plan_middle = middle._jdf.queryExecution().executedPlan().toString()
     # closing-broadcast tier: wedge join shuffles, closing probe is the
     # ONLY broadcast (single packed-long column)
     assert "BroadcastHashJoin" in plan_middle
     assert "SortMergeJoin" in plan_middle or "ShuffledHashJoin" in plan_middle
 
-    spilled = triangle_counts_from_edges(
-        edges, kernel_max_edges=0, broadcast_max_edges=0,
-        closing_broadcast_max_edges=0,
-    )
+    monkeypatch.setattr(graph, "TRIANGLE_CLOSING_BROADCAST_MAX_EDGES", 0)
+    spilled = triangle_counts_from_edges(edges)
     plan_spilled = spilled._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan_spilled
     assert "SortMergeJoin" in plan_spilled or "ShuffledHashJoin" in plan_spilled
@@ -541,7 +542,7 @@ def test_bloom_bitmap_build_is_executor_side(spark):
     assert len(words) == _WORDS
 
 
-def test_kcore_rounds_reuse_checkpointed_edges(spark):
+def test_kcore_rounds_reuse_checkpointed_edges(spark, monkeypatch):
     plan = _plan(spark, "x_graph_kcore")
     # at fixture size the r12 local kernel answers from one collect of
     # the pinned scaffold: the returned plan is a local result table,
@@ -552,9 +553,10 @@ def test_kcore_rounds_reuse_checkpointed_edges(spark):
     # edge list and each round's keep set are pinned (ExistingRDD) so
     # the lineitem scan + distinct is never re-derived per round, and
     # the PEELED chain stays lazy over those pins
-    from geostore_spark.operators.graph import q_kcore
+    from geostore_spark.operators import graph
 
-    dist = q_kcore(spark, SF, kernel_max_edges=0)
+    monkeypatch.setattr(graph, "GRAPH_LOCAL_KERNEL_MAX_EDGES", 0)
+    dist = graph.q_kcore(spark, SF)
     dplan = dist._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in dplan or "Scan ExistingRDD" in dplan
     assert "CartesianProduct" not in dplan
@@ -712,7 +714,7 @@ def test_chunk_windows_expansion_is_zero_shuffle(spark):
     assert "Join" not in plan
 
 
-def test_bfs_rounds_are_checkpointed(spark):
+def test_bfs_rounds_are_checkpointed(spark, monkeypatch):
     plan = _plan(spark, "x_graph_bfs_layers")
     # at fixture size the r12 local kernel answers from one collect of
     # the pinned scaffold — a local result table, no joins
@@ -722,9 +724,10 @@ def test_bfs_rounds_are_checkpointed(spark):
     # materializes at build (checkpoint), so the returned plan is a
     # union of counts over cached layers — round r never replays rounds
     # 0..r-1's joins at execution
-    from geostore_spark.operators.graph import q_bfs_layers
+    from geostore_spark.operators import graph
 
-    dist = q_bfs_layers(spark, SF, kernel_max_edges=0)
+    monkeypatch.setattr(graph, "GRAPH_LOCAL_KERNEL_MAX_EDGES", 0)
+    dist = graph.q_bfs_layers(spark, SF)
     dplan = dist._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in dplan
     assert "Join" not in dplan and "CartesianProduct" not in dplan

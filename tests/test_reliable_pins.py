@@ -106,21 +106,23 @@ def _purge_scaffold_entries(*key_prefixes):
             util._SESSION_CKPT.pop(k, None)
 
 
-def test_graph_loop_survives_block_loss_under_opt_in(reliable):
+def test_graph_loop_survives_block_loss_under_opt_in(reliable, monkeypatch):
     """r9 judge item 2: the per-round pins inside the distributed
     pagerank loop (rank checkpoint, edge dedup, node table) now route
     through pin_branch_point — under the opt-in, killing EVERY pinned
     block after the loop ran must degrade to a recompute through the
     whole retained lineage chain, not 'Checkpoint block not found'."""
+    from geostore_spark.operators import graph
     from geostore_spark.operators.graph import pagerank
 
     spark = reliable
     edges = spark.range(0, 400).select(
         F.col("id").alias("src"), ((F.col("id") * 7 + 3) % 400).alias("dst")
     )
-    # local_threshold=-1 forces the distributed round loop (the path
+    # a -1 kernel budget forces the distributed round loop (the path
     # whose pins were inline localCheckpoints before round 10)
-    ranks = pagerank(edges, "src", "dst", iters=3, local_threshold=-1)
+    monkeypatch.setattr(graph, "PR_KERNEL_MAX_EDGES", -1)
+    ranks = pagerank(edges, "src", "dst", iters=3)
     before = sorted(tuple(r) for r in ranks.collect())
     _drop_all_persisted_blocks(spark)
     after = sorted(tuple(r) for r in ranks.collect())

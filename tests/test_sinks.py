@@ -1,43 +1,22 @@
-"""Write-path layout guarantees: pruning, bucketed no-shuffle joins, compaction."""
+"""Write-path layout guarantees: bucketed no-shuffle joins, ORC, the metadata store."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
-from geostore_spark.sources.sinks import compact_parquet, write_bucketed, write_partitioned
+from geostore_spark.sources.bucketed import write_bucketed
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_partitioned_write_prunes_and_clusters(spark, tmp_path):
-    df = spark.range(1000).select(
-        "id",
-        (F.col("id") % 4).cast("string").alias("lang"),
-        (F.col("id") * 37 % 1000).alias("zkey"),
-    )
-    out = str(tmp_path / "docs")
-    write_partitioned(df, out, ["lang"], sort_by=["zkey"])
-    # one file per partition directory, not one per task
-    for d in os.listdir(out):
-        if d.startswith("lang="):
-            files = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
-            assert len(files) == 1, d
-    back = spark.read.parquet(out).filter(F.col("lang") == "2")
-    assert back.count() == 250
-    # the predicate became partition pruning, not a data filter
-    assert "PartitionFilters: [isnotnull(lang" in _plan(back)
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
+def test_bucketed_join_has_no_shuffle(spark):
     a = spark.range(500).select("id", (F.col("id") * 2).alias("va"))
     b = spark.range(500).select("id", (F.col("id") * 3).alias("vb"))
     try:
-        write_bucketed(a, "bk_a", "id", 4, str(tmp_path / "a"), sort_by="id")
-        write_bucketed(b, "bk_b", "id", 4, str(tmp_path / "b"), sort_by="id")
+        write_bucketed(a, "bk_a", "id", 4)
+        write_bucketed(b, "bk_b", "id", 4)
         # hint("merge"): at this toy size the planner would broadcast (and
         # rightly so); the bucketing guarantee under test is the sort-merge
         # path a 100 TB-vs-100 TB join takes
@@ -76,17 +55,6 @@ def test_orc_roundtrip_preserves_schema_and_pushdown(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(id), EqualTo(id,7)]" in plan
     assert filtered.count() == 1
     assert back.count() == 1000
-
-
-def test_compaction_bin_packs_small_files(spark, tmp_path):
-    src = str(tmp_path / "small")
-    spark.range(10_000).repartition(64).write.parquet(src)
-    stats = compact_parquet(spark, src, str(tmp_path / "big"), target_bytes=1 << 30)
-    assert stats["files_in"] == 64
-    assert stats["files_out"] == 1  # everything fits one target-size file
-    before = {r["id"] for r in spark.read.parquet(src).collect()}
-    after = {r["id"] for r in spark.read.parquet(str(tmp_path / "big")).collect()}
-    assert before == after
 
 
 def test_store_time_travel_and_history(spark, tmp_path):

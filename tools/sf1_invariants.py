@@ -15,6 +15,7 @@ which is the same argument dual-run metamorphic testing makes.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import sys
 import time
@@ -29,6 +30,20 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+@contextlib.contextmanager
+def _budgets(module, **values):
+    """Force a dispatch tier: set the module's budget constants for the
+    block, then restore them (the operators read them at call time)."""
+    saved = {name: getattr(module, name) for name in values}
+    for name, value in values.items():
+        setattr(module, name, value)
+    try:
+        yield
+    finally:
+        for name, value in saved.items():
+            setattr(module, name, value)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/tmp/sf1")
@@ -37,7 +52,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from geostore_spark.operators import spatial
+    from geostore_spark.operators import graph, spatial
     from geostore_spark.operators.dedup import simhash, simhash_pairs
     from geostore_spark.operators.graph import (
         KCORE_K,
@@ -77,11 +92,11 @@ def main() -> None:
             .localCheckpoint(eager=True)
         )
         n_edges = edges.count()
-        local = connected_components(
-            edges, "doc_a", "doc_b", local_threshold=1 << 60
-        )
-        dist = connected_components(edges, "doc_a", "doc_b", local_threshold=0)
-        rl, rd = _rows(local), _rows(dist)
+        with _budgets(graph, CC_LOCAL_MAX_EDGES=1 << 60):
+            rl = _rows(connected_components(edges, "doc_a", "doc_b"))
+        with _budgets(graph, CC_LOCAL_MAX_EDGES=0):
+            dist = connected_components(edges, "doc_a", "doc_b")
+            rd = _rows(dist)
         assert rl == rd, (
             f"union-find vs min-label disagree: {len(rl)} vs {len(rd)} rows"
         )
@@ -122,20 +137,25 @@ def main() -> None:
             .localCheckpoint(eager=True)
         )
         fast = _rows(triangle_counts_from_edges(edges))
-        slow = _rows(
-            triangle_counts_from_edges(
-                edges, broadcast_max_edges=0, closing_broadcast_max_edges=0
-            )
-        )
+        with _budgets(
+            graph,
+            TRIANGLE_KERNEL_MAX_EDGES=0,
+            TRIANGLE_BROADCAST_MAX_EDGES=0,
+            TRIANGLE_CLOSING_BROADCAST_MAX_EDGES=0,
+        ):
+            slow = _rows(triangle_counts_from_edges(edges))
         assert fast == slow, f"tier disagreement: {fast} vs {slow}"
         return {"counts": [list(r) for r in fast]}
 
     record("triangles_dual_tier", triangles)
 
-    # 3. kcore — broadcast peel vs co-partitioned shuffle peel
+    # 3. kcore — broadcast peel vs co-partitioned shuffle peel (both
+    # with the local kernel off, which sf1's edge count would select)
     def kcore() -> dict:
-        fast = _rows(q_kcore(spark, sf))
-        slow = _rows(q_kcore(spark, sf, broadcast_max_nodes=0))
+        with _budgets(graph, GRAPH_LOCAL_KERNEL_MAX_EDGES=0):
+            fast = _rows(q_kcore(spark, sf))
+            with _budgets(graph, GRAPH_BROADCAST_MAX_NODES=0):
+                slow = _rows(q_kcore(spark, sf))
         assert fast == slow, f"tier disagreement: {fast} vs {slow}"
         return {"rounds": KCORE_ROUNDS, "k": KCORE_K,
                 "final": list(fast[-1])}
